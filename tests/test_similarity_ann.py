@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from covid_custom_sql_engine_spark.catalog import load_table
@@ -836,3 +837,92 @@ def test_exact_threshold_pairs_multiblock_budget(spark, sf_dir):
     }
     assert wide, "fixture must contain qualifying pairs"
     assert tiny == wide
+
+
+# Dirty-input contract of the public functions layer: a NULL or
+# dimension-mismatched corpus vector scores NULL (zip_with null-pads
+# the shorter side) and gets a defined row instead of a task crash.
+_CLEAN_VECS = [
+    (0, [1.0, 0.0, 0.0, 0.0]),
+    (1, [0.9, 0.1, 0.0, 0.0]),
+    (2, [0.0, 1.0, 0.0, 0.0]),
+    (3, [0.1, 0.8, 0.1, 0.0]),
+    (4, [0.0, 0.0, 1.0, 1.0]),
+    (5, [0.0, 0.1, 0.7, 0.9]),
+]
+_DIRTY_VECS = [(90, None), (91, [1.0, 0.0])]
+_CELLS = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]), (2, [0.0, 0.0, 1.0, 1.0])]
+_CODEBOOKS = [[[1.0, 0.0], [0.0, 1.0]], [[1.0, 0.0], [0.6, 0.8]]]
+
+
+def _cells(spark):
+    return spark.createDataFrame(_CELLS, "cell long, _cv array<double>")
+
+
+def _topk_frame(spark, corpus):
+    q = spark.createDataFrame(_CLEAN_VECS, "query_id long, embedding array<double>")
+    return sim.brute_force_topk(corpus, q, k=len(_CLEAN_VECS) + 2)
+
+
+_DIRTY_RUNNERS = {
+    "brute_force_topk": _topk_frame,
+    "assign_cells": lambda spark, c: sim.assign_cells(c, _cells(spark)),
+    "pq_encode": lambda spark, c: sim.pq_encode(c, _CODEBOOKS),
+    "semdedup_prune": lambda spark, c: sim.semdedup_prune(
+        c, threshold=0.9, centroids=_cells(spark)
+    ),
+}
+
+
+@pytest.mark.parametrize("fn", sorted(_DIRTY_RUNNERS))
+def test_dirty_corpus_vectors_get_defined_rows(spark, fn):
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(_CLEAN_VECS, schema)
+    dirty = spark.createDataFrame(_CLEAN_VECS + _DIRTY_VECS, schema)
+    run = _DIRTY_RUNNERS[fn]
+    got = [r.asDict() for r in run(spark, dirty).collect()]
+    want = [r.asDict() for r in run(spark, clean).collect()]
+    dirty_ids = {i for i, _ in _DIRTY_VECS}
+    kept = [r for r in got if r["vec_id"] not in dirty_ids]
+    assert sorted(map(repr, kept)) == sorted(map(repr, want))
+    assert {r["vec_id"] for r in got} >= dirty_ids
+    if fn == "brute_force_topk":
+        for qid, _ in _CLEAN_VECS:
+            rows = [r for r in got if r["query_id"] == qid]
+            scored = [r["rank"] for r in rows if r["vec_id"] not in dirty_ids]
+            bad = [r for r in rows if r["vec_id"] in dirty_ids]
+            assert all(r["cos_sim"] is None for r in bad)
+            assert min(r["rank"] for r in bad) > max(scored)
+
+
+def test_assign_and_pq_encode_keep_string_ids(spark):
+    """Ids pass through untouched: non-numeric and numeric-looking
+    string ids stay strings."""
+    ids = ["v1", "1", "x-2"]
+    vecs = spark.createDataFrame(
+        [(i, v) for i, (_, v) in zip(ids, _CLEAN_VECS)],
+        "vec_id string, embedding array<double>",
+    )
+    for out in (sim.assign_cells(vecs, _cells(spark)), sim.pq_encode(vecs, _CODEBOOKS)):
+        assert out.schema["vec_id"].dataType.simpleString() == "string"
+        assert sorted(r.vec_id for r in out.collect()) == sorted(ids)
+
+
+def test_building_topk_and_assign_fires_no_jobs(spark):
+    """Building brute_force_topk / assign_cells frames runs no Spark
+    job: all the work happens when the caller acts on the result."""
+    sc = spark.sparkContext
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(_CLEAN_VECS, schema)
+    cells = _cells(spark)
+    group = "similarity-build-guard"
+    sc.setJobGroup(group, "build only")
+    try:
+        built = [_topk_frame(spark, corpus), sim.assign_cells(corpus, cells)]
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        for df in built:
+            df.count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
