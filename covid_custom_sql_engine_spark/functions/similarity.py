@@ -40,35 +40,34 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def _two_phase_topk(
-    scored: DataFrame,
-    k: int,
-    query_id_col: str,
-    order: list[Column],
-    out_cols: list[str | Column],
+    scored: DataFrame, k: int, keys: list[str], order: list[Column]
 ) -> DataFrame:
-    """Per-query top-k over a corpus-sized scored frame WITHOUT a
-    corpus-sized single-partition sort: phase 1 ranks within
-    (query, input-partition) — parallelism = input partitions, each
+    """The one ranker of this module: top-``k`` rows per ``keys`` group
+    (a query, or a (query, group) pair) of ``scored`` under ``order``
+    → ``scored``'s columns + ``rank`` (int, 1..k).
+
+    No corpus-sized single-partition sort: phase 1 ranks within
+    (keys, input-partition) — parallelism = input partitions, each
     task sorts only its slice — and phase 2 ranks the ≤ k·P survivors
-    per query. The global top-k is a subset of the union of
-    per-partition top-ks under the SAME total order (scores tie-broken
-    by the unique id), so the result is identical to the
+    per group. The global top-k is a subset of the union of
+    per-partition top-ks under the SAME total order (every caller
+    tie-breaks on a unique id), so the result is identical to the
     single-window shape for ANY partitioning — values, ties, and
     determinism unchanged, which is why the oracles don't move. The
     naive ``Window.partitionBy(query_id)`` degenerates at scale to
     |queries| reducer tasks each sorting the full corpus; this shape's
-    phase-2 input is k·P rows per query."""
+    phase-2 input is k·P rows per group."""
     from pyspark.sql import Window
 
     pre = scored.withColumn("_pid", F.spark_partition_id())
-    w1 = Window.partitionBy(query_id_col, "_pid").orderBy(*order)
-    w2 = Window.partitionBy(query_id_col).orderBy(*order)
+    w1 = Window.partitionBy(*keys, "_pid").orderBy(*order)
+    w2 = Window.partitionBy(*keys).orderBy(*order)
     return (
         pre.withColumn("_rn1", F.row_number().over(w1))
         .filter(F.col("_rn1") <= k)
         .withColumn("_rn", F.row_number().over(w2))
         .filter(F.col("_rn") <= k)
-        .select(*out_cols)
+        .select(*scored.columns, F.col("_rn").alias("rank"))
     )
 
 
@@ -120,11 +119,8 @@ def brute_force_topk(
         )
     )
     return _two_phase_topk(
-        scored,
-        k,
-        query_id_col,
+        scored, k, [query_id_col],
         [F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()],
-        [query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank")],
     )
 
 
@@ -230,8 +226,6 @@ def ivf_topk(
     corpus pass is one scan to assign cells (persisted in practice), and
     each query touches |corpus|·(n_probe/n_cells) vectors.
     """
-    from pyspark.sql import Window
-
     cents = label_centroids(embeddings, label_col, vec_col)
 
     # corpus-side cell assignment: the zero-shuffle HOF argmax over the
@@ -244,68 +238,47 @@ def ivf_topk(
         cents,
         nulls_first=True,
     ).select(F.col("_id").alias(id_col), F.col("_v").alias("_cvec"), "cell")
-
-    # query-side top-n probe: the zero-window HOF top-n over the same
-    # broadcast centroid array (optimization r13 — previously a
-    # crossJoin + row_number window, one exchange + sort of
-    # |queries|×cells rows; _probe_cells' (is-null, sim, −cell)
-    # reverse-sort is exactly the window's `−cosine ASC, cell ASC`
-    # order, and the hoisted-norm similarity is bit-equal to cosine())
     q = queries.select(
         F.col(query_id_col), as_double(vec_col).alias("_qv")
     )
-    probe = (
-        _probe_cells(
-            q.select(
-                F.col(query_id_col).alias("_id"), F.col("_qv").alias("_v")
-            ),
-            cents,
-            n_probe,
-        )
-        .select(F.col("_id").alias(query_id_col), "cell")
-        .join(q, query_id_col)
+    probe = _probe_cells(queries, cents, n_probe, query_id_col, vec_col).join(
+        q, query_id_col
     )
-
     scored = (
         corpus_cells.join(F.broadcast(probe), "cell")
         .filter(F.col(id_col) != F.col(query_id_col))
         .select(query_id_col, id_col, cosine(F.col("_qv"), F.col("_cvec")).alias("cos_sim"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank"))
+    return _two_phase_topk(
+        scored, k, [query_id_col],
+        [F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()],
     )
 
 
-def _assign_nearest(
-    vecs: DataFrame, cents: DataFrame, nulls_first: bool = False
-) -> DataFrame:
-    """Assign every ``(_id, _v)`` vector to its most-cosine-similar
-    centroid from the (cell, _cv) table → (_id, cell, _v).
+def _score_cells(
+    vecs: DataFrame, cents: DataFrame, nulls_first: bool
+) -> tuple[DataFrame, Column]:
+    """The one centroid scorer: ``(_id, _v)`` vectors crossed with the
+    (cell, _cv) table collapsed to ONE array-of-structs row, plus the
+    per-row array of scored cells — ``struct(sim, −cell)`` per
+    centroid, so a lexicographic comparison is highest similarity,
+    ties to the smallest cell id (the oracles' ``ORDER BY sim DESC,
+    cell ASC``). ``nulls_first=True`` prefixes an is-null flag so a
+    NULL similarity outranks any value (the oracles' explicit ``DESC
+    NULLS FIRST``); otherwise NULL loses (plain ``DESC``, DuckDB NULLS
+    LAST — the structs' native comparison).
 
-    The centroid table collapses to ONE array-of-structs row (a hash
-    aggregate over ≤ k rows) that is broadcast and crossed — the 1-row
+    The centroid table becomes one row (a hash aggregate over ≤ k
+    rows) that is broadcast and crossed — the 1-row
     broadcast-normalizer shape the repo whitelists — so each vector
     scores all k centroids inside a single higher-order expression:
-    ``array_max(transform(cents, c → struct(sim, -cell)))`` is the
-    lexicographic argmax — highest similarity, ties to the smallest
-    cell id — the exact ordering of the oracles' ``ORDER BY sim DESC,
-    cell ASC``. NULL-similarity placement is caller-chosen to mirror
-    each oracle's wording: the default mirrors plain ``DESC`` (DuckDB
-    NULLS LAST — NULL loses, the structs' native comparison);
-    ``nulls_first=True`` mirrors an explicit ``DESC NULLS FIRST``
-    (semdedup/IVF assignment) by prefixing the sort key with an
-    is-null flag so a NULL similarity outranks any value. Assignment therefore adds NO shuffle and no
-    N·k row materialization (a per-row argmax over broadcast DATA, the
-    execution profile of the old literal-inlined shape) while the plan
-    stays O(1) size in k — unlike inlined literals (O(k·dim) plan
-    nodes, driver-fatal at k ≈ √N), a row_number window (exchanges N·k
-    rows), or a struct-max groupBy (materializes N·k structs carrying
-    the vector through the aggregate).
+    NO shuffle and no N·k row materialization (a per-row scan over
+    broadcast DATA, the execution profile of the old literal-inlined
+    shape) while the plan stays O(1) size in k — unlike inlined
+    literals (O(k·dim) plan nodes, fatal to planning at k ≈ √N), a
+    row_number window (exchanges N·k rows), or a struct-max groupBy
+    (materializes N·k structs carrying the vector through the
+    aggregate).
 
     Each centroid's norm is computed once when the broadcast row is
     built, and each vector's norm once per row — NOT once per
@@ -316,7 +289,6 @@ def _assign_nearest(
     identical sqrt(sequential-fold) operands, so every similarity is
     bit-equal to the unhoisted expression and the oracles don't change.
     """
-    # r13 numpy GEMM screen removed: kmeans_semdedup 1.5×, semdedup_prune 1.2× slower at sf0.1/4c
     cents_arr = F.broadcast(
         cents.select(
             F.col("cell"), F.col("_cv"), norm(F.col("_cv")).alias("_cn")
@@ -347,73 +319,51 @@ def _assign_nearest(
                 t["_negc"].alias("_negc"),
             ),
         )
+    return vecs.withColumn("_vn", norm(F.col("_v"))).crossJoin(cents_arr), scored
+
+
+def _assign_nearest(
+    vecs: DataFrame, cents: DataFrame, nulls_first: bool = False
+) -> DataFrame:
+    """Assign every ``(_id, _v)`` vector to its most-cosine-similar
+    centroid from the (cell, _cv) table → (_id, cell, _v):
+    ``array_max`` over :func:`_score_cells`' scored array is the
+    lexicographic argmax. NULL-similarity placement is caller-chosen
+    to mirror each oracle's wording (``nulls_first=True`` for the
+    semdedup/IVF assignment's ``DESC NULLS FIRST``)."""
+    # r13 numpy GEMM screen removed: kmeans_semdedup 1.5×, semdedup_prune 1.2× slower at sf0.1/4c
+    crossed, scored = _score_cells(vecs, cents, nulls_first)
     best = F.array_max(scored)
-    return (
-        vecs.withColumn("_vn", norm(F.col("_v")))
-        .crossJoin(cents_arr)
-        .select(F.col("_id"), (-best["_negc"]).alias("cell"), F.col("_v"))
-    )
+    return crossed.select(F.col("_id"), (-best["_negc"]).alias("cell"), F.col("_v"))
 
 
 def _probe_cells(
-    vecs: DataFrame, cents: DataFrame, n_probe: int
+    vectors: DataFrame,
+    cents: DataFrame,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
 ) -> DataFrame:
-    """Top-``n_probe`` most-cosine-similar cells per ``(_id, _v)``
-    vector → (_id, cell): the multi-probe generalization of
-    :func:`_assign_nearest` (its ``n_probe=1`` case is exactly that
-    argmax). Same ONE-row broadcast centroid array, same per-row
-    higher-order scoring — ranking happens INSIDE a sorted array
-    (reverse(array_sort) of the (is-null, sim, −cell) structs = the
-    oracle's ``ORDER BY sim DESC NULLS FIRST, cell ASC``), so probing
-    adds NO shuffle and no N·k row materialization at any corpus
-    size — unlike the row_number-window probe shape, which exchanges
+    """The IVF candidate generator: the top-``n_probe``
+    most-cosine-similar cells per vector → (id, cell), the multi-probe
+    generalization of :func:`_assign_nearest` (its ``n_probe=1`` case
+    is exactly that argmax). Same :func:`_score_cells` array; ranking
+    happens INSIDE a sorted array (reverse(array_sort) of the
+    (is-null, sim, −cell) structs = the oracle's ``ORDER BY sim DESC
+    NULLS FIRST, cell ASC``), so probing adds NO shuffle and no N·k
+    row materialization at any corpus size — unlike the
+    row_number-window probe shape (optimization r13), which exchanges
     N·k scored rows."""
-    cents_arr = F.broadcast(
-        cents.select(
-            F.col("cell"), F.col("_cv"), norm(F.col("_cv")).alias("_cn")
-        ).agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("cell"), F.col("_cv"), F.col("_cn")))
-            ).alias("_cents")
-        )
-    )
-    denom = lambda c: F.col("_vn") * c["_cn"]  # noqa: E731
-    sim = lambda c: F.when(  # noqa: E731
-        denom(c) > 0, dot(F.col("_v"), c["_cv"]) / denom(c)
-    )
-    scored = F.transform(
-        "_cents",
-        lambda c: F.struct(
-            sim(c).isNull().cast("int").alias("_nf"),
-            sim(c).alias("_sim"),
-            (-c["cell"]).cast("long").alias("_negc"),
-        ),
+    crossed, scored = _score_cells(
+        vectors.select(F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")),
+        cents,
+        nulls_first=True,
     )
     top = F.slice(F.reverse(F.array_sort(scored)), 1, n_probe)
     return (
-        vecs.withColumn("_vn", norm(F.col("_v")))
-        .crossJoin(cents_arr)
-        .select(F.col("_id"), F.explode(top).alias("_p"))
-        .select(F.col("_id"), (-F.col("_p")["_negc"]).alias("cell"))
+        crossed.select(F.col("_id"), F.explode(top).alias("_p"))
+        .select(F.col("_id").alias(id_col), (-F.col("_p")["_negc"]).alias("cell"))
     )
-
-
-def _adc_dot(qvec: Column, m: int, sub: int) -> Column:
-    """ADC inner product ⟨q, ĉ⟩ of a float query vector against a PQ
-    code row (columns ``code_0..code_{m-1}``) under the broadcast
-    ``_cb`` codebooks: per subspace the exact dot of the query
-    subvector with the ASSIGNED codeword, summed in fixed subspace
-    order — the MIPS form of :func:`_adc_distance` (on unit vectors
-    ⟨q, ĉ⟩ estimates the cosine directly, so a similarity threshold
-    applies to it without the ‖ĉ‖² correction term)."""
-    out = None
-    for s in range(m):
-        sel = F.element_at(
-            F.element_at("_cb", s + 1), F.col(f"code_{s}") + 1
-        )
-        term = dot(F.slice(qvec, s * sub + 1, sub), sel)
-        out = term if out is None else out + term
-    return out
 
 
 def ann_join(
@@ -439,7 +389,7 @@ def ann_join(
     Pipeline (each stage the established deterministic machinery):
 
     1. IVF residence — every vector is assigned to its nearest coarse
-       cell (:func:`_assign_nearest`, zero-shuffle HOF argmax).
+       cell (:func:`assign_cells`, zero-shuffle HOF argmax).
     2. Multi-probe — every vector also probes its ``n_probe`` nearest
        cells (:func:`_probe_cells`, zero-shuffle HOF top-n).
     3. Candidates = probe ⋈ residence on the cell key — an EQUI-join:
@@ -448,7 +398,7 @@ def ann_join(
        cell key. A pair is a candidate if EITHER endpoint probes the
        other's residence cell.
     4. ADC prefilter — candidates are screened against the PQ CODES of
-       the residence side (:func:`_adc_dot` — the corpus side is read
+       the residence side (:func:`_adc_dot_lut` — the corpus side is read
        as m small ints, never floats), keeping pairs with approximate
        cosine ≥ threshold − ``margin`` (safe-side slack for the
        quantization error; bigger margin = more exact work, higher
@@ -484,18 +434,15 @@ def ann_join(
     )
     m = len(cbs)
     sub = len(cbs[0][0])
-    raw = embeddings.select(
-        F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")
-    )
     # residence + probes + unit vectors each feed ≥2 consumers — pin
     res = (
-        _assign_nearest(raw, cents, nulls_first=True)
-        .select(F.col("_id").alias("_rb"), "cell")
+        assign_cells(embeddings, cents, id_col, vec_col)
+        .select(F.col(id_col).alias("_rb"), "cell")
         .localCheckpoint(eager=False)
     )
     probes = (
-        _probe_cells(raw, cents, n_probe)
-        .select(F.col("_id").alias("_qa"), "cell")
+        _probe_cells(embeddings, cents, n_probe, id_col, vec_col)
+        .select(F.col(id_col).alias("_qa"), "cell")
         .localCheckpoint(eager=False)
     )
     nv = unit_norm_frame(embeddings, id_col, vec_col, "_nv").localCheckpoint(
@@ -512,7 +459,7 @@ def ann_join(
     # ADC LUT hoisted to ONE row per query (optimization r12, measured:
     # the screen stage was 24 s executor CPU at sf0.1 — §1.2 per-task
     # work): lut[s][j] = ⟨q_subvec_s, codeword_{s,j}⟩, the exact same
-    # dot() fold _adc_dot evaluated inline, computed once per QUERY
+    # dot() fold the screen used to evaluate inline, computed once per QUERY
     # (m·k_codes dots) instead of once per CANDIDATE (~300× more).
     # The screen becomes m LUT lookups summed in the same fixed
     # subspace order, so every double — and the margin compare — is
@@ -675,8 +622,6 @@ def lsh_topk(
     """Approximate top-k: only candidates in the query's hyperplane
     bucket are scored. Recall grows with fewer planes / multiple tables;
     this single-table variant is the scale skeleton."""
-    from pyspark.sql import Window
-
     c = embeddings.select(
         F.col(id_col),
         as_double(vec_col).alias("_cv"),
@@ -694,13 +639,9 @@ def lsh_topk(
             cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank"))
+    return _two_phase_topk(
+        scored, k, [query_id_col],
+        [F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()],
     )
 
 
@@ -829,11 +770,8 @@ def int8_topk(
         )
     )
     return _two_phase_topk(
-        scored,
-        k,
-        query_id_col,
+        scored, k, [query_id_col],
         [F.col("q_cos").desc_nulls_last(), F.col(id_col).asc()],
-        [query_id_col, id_col, "q_cos", F.col("_rn").alias("rank")],
     )
 
 
@@ -928,11 +866,7 @@ def hamming_topk(
         )
     )
     return _two_phase_topk(
-        scored,
-        k,
-        query_id_col,
-        [F.col("hamming").asc(), F.col(id_col).asc()],
-        [query_id_col, id_col, "hamming", F.col("_rn").alias("rank")],
+        scored, k, [query_id_col], [F.col("hamming").asc(), F.col(id_col).asc()]
     )
 
 
@@ -957,8 +891,6 @@ def hamming_rerank_topk(
     signature column. Output matches :func:`brute_force_topk`'s shape:
     (query_id, id, cos_sim, rank); the re-rank window sees only the
     tiny shortlist."""
-    from pyspark.sql import Window
-
     cand = hamming_topk(
         embeddings,
         queries,
@@ -967,25 +899,41 @@ def hamming_rerank_topk(
         id_col=id_col,
         vec_col=vec_col,
         query_id_col=query_id_col,
-    ).select(query_id_col, id_col)
+    )
+    return _exact_rerank(cand, embeddings, queries, k, id_col, vec_col, query_id_col)
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Exact re-rank of a (query_id, id) shortlist: only the survivors
+    join back to their float vectors (an equi-join on the id, never a
+    scan) and are re-scored with the exact cosine → (query_id, id,
+    cos_sim, rank), :func:`brute_force_topk`'s shape — NULLS LAST, ties
+    on the neighbor id."""
     c = embeddings.select(F.col(id_col), as_double(vec_col).alias("_cv"))
     q = F.broadcast(
         queries.select(F.col(query_id_col), as_double(vec_col).alias("_qv"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        cand.join(c, id_col)
+    scored = (
+        cand.select(query_id_col, id_col)
+        .join(c, id_col)
         .join(q, query_id_col)
         .select(
             query_id_col,
             id_col,
             cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"),
         )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank"))
+    )
+    return _two_phase_topk(
+        scored, k, [query_id_col],
+        [F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()],
     )
 
 
@@ -1440,33 +1388,10 @@ def _codebook_frame(spark, codebooks: list[list[list[float]]]) -> DataFrame:
     return F.broadcast(spark.createDataFrame([(data,)], schema))
 
 
-def _adc_distance(qvec: Column, m: int, sub: int) -> Column:
-    """The m-term ADC distance of query vector ``qvec`` against a code
-    row (columns ``code_0..code_{m-1}``) under the broadcast ``_cb``
-    codebook column: per subspace, the exact ``_pq_dist`` of the
-    query's subvector to the ASSIGNED codeword, summed in fixed
-    subspace order 0..m-1 so both engines fold identically. One
-    ``element_at`` chain per subspace against broadcast DATA — no
-    literals, O(1) plan size in the quantizer configuration.
-
-    Hot scans should prefer the hoisted LUT pair
-    (:func:`_adc_dist_lut` on the per-query side +
-    :func:`_adc_lut_sum` in the scan) — identical doubles, ~sub×
-    less per-candidate arithmetic."""
-    dist = None
-    for s in range(m):
-        sel = F.element_at(
-            F.element_at("_cb", s + 1), F.col(f"code_{s}") + 1
-        )
-        term = _pq_dist(F.slice(qvec, s * sub + 1, sub), sel)
-        dist = term if dist is None else dist + term
-    return dist
-
-
 def _adc_dist_lut(qvec: Column, sub: int) -> Column:
     """The classic ADC lookup table (Jégou et al. 2011), hoisted to the
     QUERY side: ``lut[s][j] = _pq_dist(q_subvec_s, codeword_{s,j})`` —
-    the exact same two-term expression :func:`_adc_distance` evaluated
+    the exact same two-term expression the ADC scan used to evaluate
     inline per CANDIDATE, now computed once per query/probe row
     (m·k_codes folds) so the per-candidate scan cost drops from
     m·O(sub) interpreted-lambda arithmetic to m array lookups
@@ -1485,10 +1410,10 @@ def _adc_dist_lut(qvec: Column, sub: int) -> Column:
 def _adc_dot_lut(qvec: Column, sub: int) -> Column:
     """MIPS-form twin of :func:`_adc_dist_lut`: ``lut[s][j] =
     dot(q_subvec_s, codeword_{s,j})`` — the exact inner-product term
-    :func:`_adc_dot` evaluates inline per candidate, hoisted once per
-    query row (r12 advice: ann_join used to hand-inline this as an
-    F.expr SQL string next to the Column-API distance twin; one
-    builder now serves both forms). Values are the identical doubles
+    of :func:`ann_join`'s ADC screen, hoisted once per query row (r12
+    advice: ann_join used to hand-inline this as an F.expr SQL string
+    next to the Column-API distance twin; one function now serves both
+    forms). Values are the identical doubles
     (same zip_with/aggregate fold, same 0.0 seed), so screens and the
     oracles don't move. Project with the broadcast ``_cb`` column in
     scope; pair with :func:`_adc_lut_sum`."""
@@ -1624,10 +1549,7 @@ def pq_topk(
     # same no-single-partition-sort discipline as brute_force_topk
     return _two_phase_topk(
         joined.select(query_id_col, id_col, dist.alias("pq_dist")),
-        k,
-        query_id_col,
-        [F.col("pq_dist").asc(), F.col(id_col).asc()],
-        [query_id_col, id_col, "pq_dist", F.col("_rn").alias("rank")],
+        k, [query_id_col], [F.col("pq_dist").asc(), F.col(id_col).asc()],
     )
 
 
@@ -1670,69 +1592,15 @@ def ivfpq_topk(
     non-matching vectors; `filtered_ann_audit` measures that gap
     (post-filter hits ⊆ pre-filter hits, provably).
     At scale the predicate reaches the scan as an ordinary pushed
-    filter on the codes table's metadata columns."""
-    from pyspark.sql import Window
+    filter on the codes table's metadata columns.
 
-    cents = label_centroids(embeddings, label_col, vec_col)
-    cbs = pq_codebooks(embeddings, m, k_codes, id_col, vec_col)
-    sub = len(cbs[0][0])
-    scan_src = (
-        embeddings.filter(corpus_predicate)
-        if corpus_predicate is not None
-        else embeddings
+    The dataflow is :func:`query_ivfpq_index` over the in-memory
+    :func:`_ivfpq_index`, so the two are row-identical by construction."""
+    index = _ivfpq_index(
+        embeddings, m, k_codes, id_col, vec_col, label_col, corpus_predicate
     )
-
-    # corpus-side cell assignment: zero-shuffle HOF argmax (r7); see
-    # ivf_topk — nulls_first mirrors the oracle's DESC NULLS FIRST
-    corpus_cells = _assign_nearest(
-        scan_src.select(F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")),
-        cents,
-        nulls_first=True,
-    ).select(F.col("_id").alias(id_col), "cell")
-    qn = unit_norm_frame(queries, query_id_col, vec_col, "_qn")
-    q = queries.select(
-        F.col(query_id_col), as_double(vec_col).alias("_qv")
-    ).join(qn, query_id_col)
-    # query-side top-n_probe via the zero-window HOF top-n over the
-    # broadcast centroid array (optimization r13 — replaces the
-    # crossJoin + row_number window; _probe_cells' reverse-sorted
-    # (is-null, sim, −cell) structs ARE the window's `−cosine ASC,
-    # cell ASC` order with bit-equal similarities)
-    probes = (
-        _probe_cells(
-            q.select(
-                F.col(query_id_col).alias("_id"), F.col("_qv").alias("_v")
-            ),
-            cents,
-            n_probe,
-        )
-        .select(F.col("_id").alias(query_id_col), "cell")
-        .join(qn, query_id_col)
-        .select(query_id_col, "cell", "_qn")
-        # ADC LUT hoisted per probe row (see _adc_dist_lut): the cell
-        # scan pays m lookups per code row — identical doubles
-        .crossJoin(_codebook_frame(embeddings.sparkSession, cbs))
-        .select(
-            query_id_col,
-            "cell",
-            _adc_dist_lut(F.col("_qn"), sub).alias("_lut"),
-        )
-    )
-    codes = pq_encode(scan_src, cbs, id_col, vec_col)
-    scan = (
-        codes.join(corpus_cells, id_col)
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-    )
-    dist = _adc_lut_sum(m)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scan.select(query_id_col, id_col, dist.alias("pq_dist"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "pq_dist", F.col("_rn").alias("rank"))
+    return query_ivfpq_index(
+        index, queries, k, n_probe, id_col, vec_col, query_id_col
     )
 
 
@@ -1771,19 +1639,11 @@ def ivfpq_residual_topk(
     table, not a shuffle), ADC over codes in n_probe/n_cells of the
     corpus.
     """
-    from pyspark.sql import Window
-
     cents = label_centroids(embeddings, label_col, vec_col)
     # unit-normalized centroids — the residual reference frame (tiny,
     # broadcast everywhere)
     cn = cents.select("cell", unit(F.col("_cv")).alias("_cn"))
-    corpus_cells = _assign_nearest(
-        embeddings.select(
-            F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")
-        ),
-        cents,
-        nulls_first=True,
-    ).select(F.col("_id").alias(id_col), "cell")
+    corpus_cells = assign_cells(embeddings, cents, id_col, vec_col)
     nvf = unit_norm_frame(embeddings, id_col, vec_col)
     resid = (
         nvf.join(corpus_cells, id_col)
@@ -1817,21 +1677,9 @@ def ivfpq_residual_topk(
     # query-side probing: same raw-vector cosine rule as ivfpq_topk,
     # then per probed cell the query residual qr = qn − cn(cell)
     qn = unit_norm_frame(queries, query_id_col, vec_col, "_qn")
-    q = queries.select(
-        F.col(query_id_col), as_double(vec_col).alias("_qv")
-    ).join(qn, query_id_col)
-    # zero-window HOF top-n_probe (optimization r13; see ivfpq_topk)
     probes = (
-        _probe_cells(
-            q.select(
-                F.col(query_id_col).alias("_id"), F.col("_qv").alias("_v")
-            ),
-            cents,
-            n_probe,
-        )
-        .select(F.col("_id").alias(query_id_col), "cell")
+        _probe_cells(queries, cents, n_probe, query_id_col, vec_col)
         .join(qn, query_id_col)
-        .select(query_id_col, "cell", "_qn")
         .join(cn, "cell")
         .select(
             query_id_col,
@@ -1855,14 +1703,9 @@ def ivfpq_residual_topk(
         .filter(F.col(id_col) != F.col(query_id_col))
     )
     dist = F.col("_qrr") + _adc_lut_sum(m)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scan.select(query_id_col, id_col, dist.alias("pq_dist"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "pq_dist", F.col("_rn").alias("rank"))
+    return _two_phase_topk(
+        scan.select(query_id_col, id_col, dist.alias("pq_dist")),
+        k, [query_id_col], [F.col("pq_dist").asc(), F.col(id_col).asc()],
     )
 
 
@@ -1887,8 +1730,6 @@ def diversified_topk(
     iteration), so the SQL oracle is two stacked ranking windows. At
     scale the group stage runs on (query, group) partitions and the
     final stage sees ≤ |groups|·per_group rows per query."""
-    from pyspark.sql import Window
-
     q = F.broadcast(
         queries.select(
             F.col(query_id_col), as_double(vec_col).alias("_qv")
@@ -1909,20 +1750,11 @@ def diversified_topk(
         )
     )
     order = [F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()]
-    wg = Window.partitionBy(query_id_col, "_grp").orderBy(*order)
-    w = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        scored.withColumn("_rg", F.row_number().over(wg))
-        .filter(F.col("_rg") <= per_group)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.col("_grp").alias(group_col),
-            "cos_sim",
-            F.col("_rn").alias("rank"),
-        )
+    capped = _two_phase_topk(scored, per_group, [query_id_col, "_grp"], order)
+    return _two_phase_topk(
+        capped.drop("rank"), k, [query_id_col], order
+    ).select(
+        query_id_col, id_col, F.col("_grp").alias(group_col), "cos_sim", "rank"
     )
 
 
@@ -1986,17 +1818,10 @@ def mmr_topk(
         )
         .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Window
-
     order = [F.col("_score").desc_nulls_last(), F.col(id_col).asc()]
-    w = Window.partitionBy(query_id_col).orderBy(*order)
-    sel = (
-        cand.withColumn("_score", F.lit(lam) * F.col("_rel"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            query_id_col, id_col, "_score", F.lit(1).alias("rank")
-        )
+    sel = _two_phase_topk(
+        cand.select(query_id_col, id_col, (F.lit(lam) * F.col("_rel")).alias("_score")),
+        1, [query_id_col], order,
     )
     for step in range(2, k + 1):
         # every frame renamed to globally-unique column names before
@@ -2031,18 +1856,17 @@ def mmr_topk(
                 "_msim",
             )
         )
-        pick = (
-            mx.withColumn(
-                "_score",
-                F.lit(lam) * F.col("_rel")
-                - F.lit(1.0 - lam) * F.col("_msim"),
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                query_id_col, id_col, "_score", F.lit(step).alias("rank")
-            )
-        )
+        pick = _two_phase_topk(
+            mx.select(
+                query_id_col,
+                id_col,
+                (
+                    F.lit(lam) * F.col("_rel")
+                    - F.lit(1.0 - lam) * F.col("_msim")
+                ).alias("_score"),
+            ),
+            1, [query_id_col], order,
+        ).withColumn("rank", F.lit(step))
         # pin the (≤ step·|queries|-row) selected set: keeps each
         # step's plan flat AND severs the pairs lineage so the next
         # step's joins aren't self-joins of the pairs subtree
@@ -2086,29 +1910,44 @@ def build_ivfpq_index(
     :func:`load_ivfpq_index` + :func:`query_ivfpq_index`, whose
     results are row-identical to :func:`ivfpq_topk` on the same
     corpus (pytest-pinned)."""
-    spark = embeddings.sparkSession
-    cents = label_centroids(embeddings, label_col, vec_col)
-    cbs = pq_codebooks(embeddings, m, k_codes, id_col, vec_col)
-    cells = _assign_nearest(
-        embeddings.select(
-            F.col(id_col).alias("_id"), as_double(vec_col).alias("_v")
-        ),
-        cents,
-        nulls_first=True,
-    ).select(F.col("_id").alias(id_col), "cell")
-    codes = pq_encode(embeddings, cbs, id_col, vec_col)
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
+    index = _ivfpq_index(embeddings, m, k_codes, id_col, vec_col, label_col)
+    index["centroids"].write.mode("overwrite").parquet(f"{path}/centroids")
+    embeddings.sparkSession.createDataFrame(
         [
             (s, j, cw)
-            for s, sub in enumerate(cbs)
+            for s, sub in enumerate(index["codebooks"])
             for j, cw in enumerate(sub)
         ],
         "s int, j int, codeword array<double>",
     ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    codes.join(cells, id_col).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{path}/postings")
+    index["postings"].write.mode("overwrite").partitionBy("cell").parquet(
+        f"{path}/postings"
+    )
+
+
+def _ivfpq_index(
+    embeddings: DataFrame,
+    m: int,
+    k_codes: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    corpus_predicate: Column | None = None,
+) -> dict:
+    """The IVFADC index in memory — the dict :func:`load_ivfpq_index`
+    returns: centroids (per-``label`` means) and codebooks trained on
+    the FULL corpus, postings = PQ codes ⋈ cells of the corpus rows
+    matching ``corpus_predicate`` (the filter prunes only the scan
+    side). Lazy apart from the codebook seed fetch."""
+    cents = label_centroids(embeddings, label_col, vec_col)
+    cbs = pq_codebooks(embeddings, m, k_codes, id_col, vec_col)
+    src = (
+        embeddings if corpus_predicate is None else embeddings.filter(corpus_predicate)
+    )
+    postings = pq_encode(src, cbs, id_col, vec_col).join(
+        assign_cells(src, cents, id_col, vec_col), id_col
+    )
+    return {"centroids": cents, "postings": postings, "codebooks": cbs}
 
 
 def load_ivfpq_index(spark, path: str) -> dict:
@@ -2148,32 +1987,16 @@ def query_ivfpq_index(
     bytes per vector in n_probe/n_cells of the corpus, exactly the
     ivfpq_topk dataflow minus every build-time step. Results are
     row-identical to :func:`ivfpq_topk` on the same corpus."""
-    from pyspark.sql import Window
-
-    cents = index["centroids"]
     cbs = index["codebooks"]
     m = len(cbs)
     sub = len(cbs[0][0])
-    spark = queries.sparkSession
     qn = unit_norm_frame(queries, query_id_col, vec_col, "_qn")
-    q = queries.select(
-        F.col(query_id_col), as_double(vec_col).alias("_qv")
-    ).join(qn, query_id_col)
-    # zero-window HOF top-n_probe (optimization r13; see ivfpq_topk —
-    # keeps the serve path row-identical to it)
     probes = (
-        _probe_cells(
-            q.select(
-                F.col(query_id_col).alias("_id"), F.col("_qv").alias("_v")
-            ),
-            cents,
-            n_probe,
-        )
-        .select(F.col("_id").alias(query_id_col), "cell")
+        _probe_cells(queries, index["centroids"], n_probe, query_id_col, vec_col)
         .join(qn, query_id_col)
-        .select(query_id_col, "cell", "_qn")
-        # ADC LUT hoisted per probe row (see _adc_dist_lut)
-        .crossJoin(_codebook_frame(spark, cbs))
+        # ADC LUT hoisted per probe row (see _adc_dist_lut): the cell
+        # scan pays m lookups per code row — identical doubles
+        .crossJoin(_codebook_frame(queries.sparkSession, cbs))
         .select(
             query_id_col,
             "cell",
@@ -2185,15 +2008,9 @@ def query_ivfpq_index(
         .join(F.broadcast(probes), "cell")
         .filter(F.col(id_col) != F.col(query_id_col))
     )
-    dist = _adc_lut_sum(m)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scan.select(query_id_col, id_col, dist.alias("pq_dist"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "pq_dist", F.col("_rn").alias("rank"))
+    return _two_phase_topk(
+        scan.select(query_id_col, id_col, _adc_lut_sum(m).alias("pq_dist")),
+        k, [query_id_col], [F.col("pq_dist").asc(), F.col(id_col).asc()],
     )
 
 
@@ -2388,8 +2205,6 @@ def rrf_fuse(
     default). Ties break on the candidate id. Output: (query_id, id,
     rrf_score rounded to 6, rank 1..k).
     """
-    from pyspark.sql import Window
-
     from covid_custom_sql_engine_spark.operators.core import dsum
 
     if not rankings:
@@ -2406,18 +2221,13 @@ def rrf_fuse(
     for pr in parts[1:]:
         allr = allr.unionByName(pr)
     fused = allr.groupBy(query_id_col, id_col).agg(dsum(F.col("_t")).alias("_s"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_s").desc(), F.col(id_col).asc()
-    )
-    return (
-        fused.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            (F.round("_s", 6) + 0.0).alias("rrf_score"),
-            F.col("_rn").cast("bigint").alias("rank"),
-        )
+    return _two_phase_topk(
+        fused, k, [query_id_col], [F.col("_s").desc(), F.col(id_col).asc()]
+    ).select(
+        query_id_col,
+        id_col,
+        (F.round("_s", 6) + 0.0).alias("rrf_score"),
+        F.col("rank").cast("bigint").alias("rank"),
     )
 
 
@@ -2446,8 +2256,6 @@ def ivfpq_rerank_topk(
     :func:`brute_force_topk`'s shape: (query_id, id, cos_sim, rank),
     ties on the neighbor id, NULLS LAST like the exact baseline.
     """
-    from pyspark.sql import Window
-
     cand = ivfpq_topk(
         embeddings,
         queries,
@@ -2459,26 +2267,8 @@ def ivfpq_rerank_topk(
         vec_col=vec_col,
         query_id_col=query_id_col,
         label_col=label_col,
-    ).select(query_id_col, id_col)
-    c = embeddings.select(F.col(id_col), as_double(vec_col).alias("_cv"))
-    q = F.broadcast(
-        queries.select(F.col(query_id_col), as_double(vec_col).alias("_qv"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        cand.join(c, id_col)
-        .join(q, query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("_rn").alias("rank"))
-    )
+    return _exact_rerank(cand, embeddings, queries, k, id_col, vec_col, query_id_col)
 
 
 def opq_householder_direction(

@@ -1,10 +1,12 @@
-"""Default-path oracle smoke for the exact top-k / cell-assignment /
-PQ-encode consumers: each query runs at sf0.001 and must match its
-DuckDB ``oracle_sql()`` under the same order-insensitive comparison as
-tools/check_oracle.py."""
+"""Default-path oracle smoke for the similarity top-k family (exact,
+LSH, IVF, int8, binary, PQ/IVF-PQ, re-rank, fusion and diversified
+rankers) and its cell-assignment / PQ-encode consumers: each query runs
+at sf0.001 and must match its DuckDB ``oracle_sql()`` under the same
+order-insensitive comparison as tools/check_oracle.py."""
 
 from __future__ import annotations
 
+import glob
 import os
 import sys
 
@@ -23,16 +25,26 @@ QUERIES = [
     "pq_topk_recall",
     "ivfpq_topk_recall",
     "ann_join_recall",
+    "lsh_topk",
+    "ivf_topk",
+    "int8_topk_recall",
+    "binary_hamming_recall",
+    "binary_rerank_recall",
+    "ivfpq_rerank_recall",
+    "ivfpq_residual_recall",
+    "rrf_fusion",
+    "hybrid_search",
+    "diversified_topk",
+    "mmr_topk",
 ]
 
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    )
+    for path in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        table = os.path.splitext(os.path.basename(path))[0]
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
 

@@ -908,17 +908,87 @@ def test_assign_and_pq_encode_keep_string_ids(spark):
         assert sorted(r.vec_id for r in out.collect()) == sorted(ids)
 
 
+_PLANES = [[1.0, -1.0, 0.0, 0.0], [0.0, 0.0, 1.0, -1.0]]
+
+
+def _labelled(spark):
+    return spark.createDataFrame(
+        [(i, v, i // 2) for i, v in _CLEAN_VECS],
+        "vec_id long, embedding array<double>, label long",
+    )
+
+
+def _queries(spark, rows):
+    return spark.createDataFrame(rows, "query_id long, embedding array<double>")
+
+
+def _index(corpus):
+    cells = _cells(corpus.sparkSession)
+    postings = sim.pq_encode(corpus, _CODEBOOKS).join(
+        sim.assign_cells(corpus, cells), "vec_id"
+    )
+    return {"centroids": cells, "postings": postings, "codebooks": _CODEBOOKS}
+
+
+# Ranked entry points over the in-file fixture, (corpus, queries) →
+# frame; the first group builds without running a Spark job.
+_LAZY_RANKERS = {
+    "brute_force_topk": lambda c, q: sim.brute_force_topk(c, q, k=3),
+    "lsh_topk": lambda c, q: sim.lsh_topk(c, q, _PLANES, k=3),
+    "ivf_topk": lambda c, q: sim.ivf_topk(c, q, k=3, n_probe=2),
+    "int8_topk": lambda c, q: sim.int8_topk(c, q, k=3),
+    "hamming_topk": lambda c, q: sim.hamming_topk(c, q, _PLANES, k=3),
+    "hamming_rerank_topk": lambda c, q: sim.hamming_rerank_topk(
+        c, q, _PLANES, k=2, cand_factor=2
+    ),
+    "pq_topk": lambda c, q: sim.pq_topk(c, q, k=3, codebooks=_CODEBOOKS),
+    "query_ivfpq_index": lambda c, q: sim.query_ivfpq_index(
+        _index(c), q, k=3, n_probe=2
+    ),
+    "diversified_topk": lambda c, q: sim.diversified_topk(c, q, k=2),
+    "rrf_fuse": lambda c, q: sim.rrf_fuse(
+        [sim.brute_force_topk(c, q, k=3), sim.lsh_topk(c, q, _PLANES, k=3)], k=3
+    ),
+}
+_RANKERS = {
+    **_LAZY_RANKERS,
+    "ivfpq_topk": lambda c, q: sim.ivfpq_topk(c, q, k=3, m=2, k_codes=4),
+    "ivfpq_residual_topk": lambda c, q: sim.ivfpq_residual_topk(
+        c, q, k=3, m=2, k_codes=4
+    ),
+    "ivfpq_rerank_topk": lambda c, q: sim.ivfpq_rerank_topk(
+        c, q, k=2, cand_factor=2, m=2, k_codes=4
+    ),
+    "mmr_topk": lambda c, q: sim.mmr_topk(c, q, k=2, shortlist=3),
+}
+
+
+@pytest.mark.parametrize("fn", sorted(_RANKERS))
+def test_ranked_entry_points_on_empty_queries(spark, fn):
+    """An empty queries frame yields zero rows under the schema a
+    non-empty one gets."""
+    corpus = _labelled(spark)
+    full = _RANKERS[fn](corpus, _queries(spark, _CLEAN_VECS))
+    empty = _RANKERS[fn](corpus, _queries(spark, []))
+    assert empty.collect() == []
+    assert empty.schema == full.schema
+
+
 def test_building_topk_and_assign_fires_no_jobs(spark):
-    """Building brute_force_topk / assign_cells frames runs no Spark
-    job: all the work happens when the caller acts on the result."""
+    """Building brute_force_topk / assign_cells and the other lazy
+    ranked entry points runs no Spark job: all the work happens when
+    the caller acts on the result."""
     sc = spark.sparkContext
     schema = "vec_id long, embedding array<double>"
     corpus = spark.createDataFrame(_CLEAN_VECS, schema)
     cells = _cells(spark)
+    labelled = _labelled(spark)
+    queries = _queries(spark, _CLEAN_VECS)
     group = "similarity-build-guard"
     sc.setJobGroup(group, "build only")
     try:
         built = [_topk_frame(spark, corpus), sim.assign_cells(corpus, cells)]
+        built += [run(labelled, queries) for run in _LAZY_RANKERS.values()]
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         for df in built:
             df.count()
